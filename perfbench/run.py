@@ -45,15 +45,21 @@ END_TO_END = {
 PER_LAYER = {
     "session.get_spark_s": "s", "session.load_tables_s": "s",
     "engine.fixture_fit_s": "s", "engine.build_ms": "ms",
-    "engine.build_jobs": "count", "catalog.save_ms": "ms",
-    "catalog.open_ms": "ms", "parser.parse_ms": "ms",
-    "parser.share_frac": "frac", "backends.estimate_ms": "ms",
-    "backends.fit_ms": "ms", "backends.calls": "count",
+    "engine.build_jobs": "count", "catalog.open_ms": "ms",
+    "parser.parse_ms": "ms", "parser.share_frac": "frac",
+    "backends.estimate_ms": "ms", "backends.calls": "count",
     "backends.fit_setup_s": "s", "catalog.save_setup_s": "s",
     "operators.fixture_s": "s", "operators.build_ms": "ms",
     "operators.build_jobs": "count", "catalyst.plan_ms": "ms",
     "exec.action_ms": "ms", "exec.jobs": "count", "exec.stages": "count",
-    "exec.tasks": "count", "trace.overhead_frac": "frac",
+    "exec.tasks": "count", "trace.overhead_ratio": "ratio",
+}
+# Traced-run metrics printed in the report but left out of the JSON line:
+# no listed workload's timed passes save or fit a model, and the overhead
+# as a fraction can be 0 or negative.
+REPORT_ONLY = {
+    "catalog.save_ms": "ms", "backends.fit_ms": "ms",
+    "trace.overhead_frac": "frac",
 }
 
 
@@ -66,8 +72,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf", type=float, default=DATA_SF,
                     help="scale factor of the generated inputs")
-    ap.add_argument("--passes", type=int, default=None,
-                    help="timed passes (default: from --seconds)")
     ap.add_argument("--warmup", type=int, default=None,
                     help="warm-up passes after the cold pass")
     ap.add_argument("--corrupt", action="store_true",
@@ -89,8 +93,7 @@ def snapshot(skip: str) -> dict[str, tuple]:
     """Every file and directory of the checkout with size and mtime."""
     out = {}
     for d, dirs, files in os.walk(ROOT):
-        dirs[:] = [x for x in dirs if os.path.join(d, x) != skip
-                   and x != ".bench_build"]
+        dirs[:] = [x for x in dirs if os.path.join(d, x) != skip]
         for name in dirs + files:
             p = os.path.join(d, name)
             st = os.lstat(p)

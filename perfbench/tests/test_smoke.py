@@ -1,8 +1,9 @@
 """End-to-end smoke test of the benchmark at sf0.001.
 
-Runs every workload for one pass after the cold pass, plain and traced, and
-checks that every metric is printed with its unit and that the final line
-is the result object.  A corrupted result must make ``failed_frac`` > 0.
+Runs every workload with ``--seconds 1`` and no warm-up, plain (one timed
+pass) and traced (a plain and a traced timed pass), and checks that every
+metric is printed with its unit and that the final line is the result
+object.  A corrupted result must make ``failed_frac`` > 0.
 
     python3 -m pytest perfbench/tests -q
 """
@@ -30,7 +31,7 @@ def bench(workload: str, trace: int, *extra: str) -> tuple[str, dict]:
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", "7", "--seconds", "1", "--trace", str(trace),
-         "--sf", "0.001", "--warmup", "0", "--passes", "1", *extra],
+         "--sf", "0.001", "--warmup", "0", *extra],
         cwd=ROOT, capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-3000:]
     return out.stdout, json.loads(out.stdout.strip().splitlines()[-1])
@@ -48,6 +49,9 @@ def test_every_metric_printed(workload, trace):
     assert result["correct"] and result["failed"] == 0, stdout
     want = dict(run.PER_LAYER if trace else run.END_TO_END)
     assert {k: v["unit"] for k, v in result["metrics"].items()} == want
+    if trace:
+        assert result["metrics"]["trace.overhead_ratio"]["value"] > 0
+        want.update(run.REPORT_ONLY)
     units = printed_units(stdout)
     want["failed_frac"] = "frac"
     for name, unit in want.items():

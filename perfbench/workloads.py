@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import zlib
 from dataclasses import dataclass
 from typing import Any, Callable
 
@@ -96,6 +97,14 @@ class Workload:
     def rng(self, pass_no: int) -> np.random.Generator:
         return np.random.default_rng([self.seed, pass_no])
 
+    def distinct(self, key: str, pass_no: int, n: int) -> int:
+        """An index in ``range(n)`` that no other pass of the run draws for
+        ``key`` (a seeded permutation), so no statement text repeats."""
+        if pass_no >= n:
+            raise ValueError(f"{key}: only {n} distinct values for pass {pass_no}")
+        perm = np.random.default_rng([self.seed, zlib.crc32(key.encode())])
+        return int(perm.permutation(n)[pass_no])
+
     def setup(self) -> dict[str, float]:
         """Build the workload's fixture; returns per-layer setup seconds."""
         return {}
@@ -127,12 +136,17 @@ class BqlQuery(Workload):
         return {"engine.fixture_fit_s": time.perf_counter() - t0}
 
     def ops(self, pass_no: int) -> list[Op]:
+        # every statement carries one constant drawn with distinct(); the
+        # other constants come from the pass's generator
         r = self.rng(pass_no)
 
         def bql(name, text, check):
             return Op(name, "bql", lambda: self.eng.execute(text), check)
 
-        d = round(float(r.uniform(0.035, 0.055)), 4)
+        def distinct(key, n):
+            return self.distinct(key, pass_no, n)
+
+        d = round(0.035 + distinct("select", 200) / 1e4, 4)
         select_sql = (
             "SELECT l_returnflag, count(*) AS n, round(avg(l_quantity), 6) "
             f"AS avg_qty FROM lineitem WHERE l_discount > {d} "
@@ -140,7 +154,7 @@ class BqlQuery(Workload):
 
         a, b = r.choice(["l_quantity", "l_extendedprice", "l_discount",
                          "l_tax"], 2, replace=False)
-        v = round(float(r.uniform(20, 30)), 3)
+        v = round(20 + distinct("estimate_by", 10000) / 1e3, 3)
         corr_bql = (f"ESTIMATE CORRELATION OF {a} WITH {b} AS corr, "
                     f"PROBABILITY DENSITY OF l_quantity = {v} AS density "
                     "BY pop_li")
@@ -155,13 +169,14 @@ class BqlQuery(Workload):
                 None if abs(got[0] - want) <= 1e-6 else f"corr {got[0]} != {want}",
                 in_range(col(rec, "density"), 1e-300, math.inf, "density"))
 
-        c = r.choice(["l_extendedprice", "l_discount", "l_tax"])
-        n_mi = int(r.integers(90, 110))
+        i = distinct("dependence_by", 60)
+        c = ["l_extendedprice", "l_discount", "l_tax"][i % 3]
+        n_mi = 90 + i // 3
         dep_bql = (f"ESTIMATE DEPENDENCE PROBABILITY OF l_quantity WITH {c} "
                    f"AS dep, MUTUAL INFORMATION OF l_quantity WITH {c} "
                    f"USING {n_mi} SAMPLES AS mi BY pop_li")
 
-        key = int(r.integers(700, 800))
+        key = 700 + distinct("predictive_probability", 100)
         lim = int(r.integers(450, 550))
         pp_bql = ("ESTIMATE l_orderkey, l_linenumber, PREDICTIVE PROBABILITY "
                   f"OF l_quantity AS pp FROM pop_li WHERE l_orderkey < {key} "
@@ -173,29 +188,29 @@ class BqlQuery(Workload):
                                # a log density: finite means density > 0
                                in_range(col(rec, "pp"), -1e300, 1e300, "pp"))
 
-        n_pair = int(r.integers(140, 160))
+        n_pair = 130 + distinct("pairwise_columns", 40)
         pair_bql = ("ESTIMATE DEPENDENCE PROBABILITY AS dep, MUTUAL INFORMATION "
                     f"USING {n_pair} SAMPLES AS mi FROM PAIRWISE COLUMNS OF pop_cc")
 
-        t = round(float(r.uniform(0.65, 0.75)), 4)
+        t = round(0.65 + distinct("pairwise_similarity", 1000) / 1e4, 4)
         lim_sim = int(r.integers(180, 220))
         sim_bql = ("ESTIMATE SIMILARITY IN THE CONTEXT OF s_acctbal AS sim "
                    f"FROM PAIRWISE pop_sim WHERE sim >= {t} "
                    f"ORDER BY sim DESC, rowid0, rowid1 LIMIT {lim_sim}")
 
-        n_nig = int(r.integers(450, 550))
-        n_cc = int(r.integers(270, 330))
-        rowid = int(r.integers(1, 100))
+        n_nig = 450 + distinct("simulate_nig", 100)
+        n_cc = 270 + distinct("simulate_crosscat", 60)
+        rowid = 1 + distinct("simulate_given_rowid", 99)
         n_row = int(r.integers(90, 110))
         n_mod = int(r.integers(180, 220))
-        dens = round(float(r.uniform(500, 7500)), 2)
+        dens = 500 + distinct("simulate_models", 7000)
         models_bql = (f"SIMULATE MUTUAL INFORMATION OF c_acctbal WITH c_nationkey "
                       f"USING {n_mod} SAMPLES AS mi, DEPENDENCE PROBABILITY OF "
                       "c_acctbal WITH c_nationkey AS dep, PROBABILITY DENSITY OF "
                       f"c_acctbal = {dens} AS density FROM MODELS OF pop_cc")
         n_models = len(self.eng.catalog.generator("gen_cc").models)
 
-        ck = int(r.integers(180, 220))
+        ck = 180 + distinct("infer_explicit", 40)
         infer_bql = ("INFER EXPLICIT c_custkey, PREDICT c_mktsegment AS seg "
                      f"CONFIDENCE seg_conf FROM pop_cust WHERE c_custkey <= {ck}")
 
@@ -206,12 +221,12 @@ class BqlQuery(Workload):
                                f"{nulls} NULL predictions" if nulls else None,
                                in_range(col(rec, "seg_conf"), 0, 1, "confidence"))
 
-        n_reg = int(r.integers(180, 220))
+        n_reg = 180 + distinct("regress", 40)
         regress_bql = ("REGRESS c_acctbal GIVEN (c_nationkey, c_mktsegment) "
                        f"USING {n_reg} SAMPLES BY pop_cc")
 
         q = int(r.integers(20, 40))
-        h = int(r.integers(100, 2000))
+        h = 100 + distinct("estimate_group_by", 1900)
         group_bql = ("ESTIMATE l_returnflag, COUNT(*) AS n, ROUND(AVG(l_quantity), 6) "
                      f"AS avg_qty FROM pop_li WHERE l_quantity <= {q} "
                      f"GROUP BY l_returnflag HAVING COUNT(*) > {h} ORDER BY l_returnflag")
